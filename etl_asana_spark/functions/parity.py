@@ -14,14 +14,15 @@ conversion:
    bit-identical across engines, and Spark's ``floor(double)`` is already
    LONG-typed). Plain codegen-friendly arithmetic — no BigDecimal per row.
 2. The unit count is split around modulus ``2^20`` into two BIGINT
-   accumulators: ``lo = pmod(u, 2^20)`` (integer pmod — cheap) and
-   ``hi = (u - lo) / 2^20`` (division by a power of two only shifts the
-   exponent, so it is EXACT in IEEE doubles; the long cast is exact because
-   the quotient is integral). Each part is summed as a plain BIGINT —
-   integer addition is exact and associative, so any summation order,
-   partitioning, or AQE re-plan yields the identical total, and the two
-   BIGINT sums measure ~1.6× faster than a DECIMAL(38,0) accumulator
-   (TPC-H Q1 shape: 0.52 s → 0.34 s at sf0.1, interleaved min-of-8).
+   accumulators: ``lo = ((u % 2^20) + 2^20) % 2^20`` (an integer pmod —
+   cheap) and ``hi = (u - lo) / 2^20`` (a DOUBLE division by a power of two
+   only shifts the exponent, so it is EXACT in IEEE doubles; the long cast
+   is exact because the quotient is integral). Each part is summed as a
+   plain BIGINT — integer addition is exact and associative, so any
+   summation order, partitioning, or AQE re-plan yields the identical total,
+   and the two BIGINT sums measure ~1.6× faster than a DECIMAL(38,0)
+   accumulator (TPC-H Q1 shape: 0.52 s → 0.34 s at sf0.1, interleaved
+   min-of-8).
 3. The partial sums recombine exactly ONCE PER GROUP in DECIMAL(38,0)
    (``sum_hi * 2^20 + sum_lo`` can exceed BIGINT range even when each part
    is in range), then one cast to double divides by 10^scale — a
@@ -43,14 +44,20 @@ point. Squared/product moments (correlation, variance, z-score pipelines)
 use :func:`dsum_wide` / :func:`sql_dsum_wide`, the DECIMAL(38,0)
 single-accumulator form — overflow-safe to 10^32 value units — which is
 also the entry for re-aggregatable MATERIALIZED state with unbounded
-lifetime (operators/mv.py, via :func:`_units_dec`). Rule of thumb: split
-for first moments of money/measure columns, wide for anything whose
+lifetime (operators/mv.py, via ``sql_units(expr, _ACC)``). Rule of thumb:
+split for first moments of money/measure columns, wide for anything whose
 per-row magnitude can exceed ~10^7.
 
-``dsum``/``davg`` (Spark) pair with ``sql_dsum``/``sql_davg`` (oracle SQL);
-both sides compute the identical exact integer, so parity is exact by
-construction (verified bit-for-bit at sf0.1, 600 k rows, and under
-``SWEEP_SHUFFLE=7`` partitioning).
+One definition: the ``sql_*`` builders below are the only place the
+fixed-point forms are written down. The same text is the DuckDB oracle's
+expression and, through ``F.expr``, the engine's (:func:`dsum`,
+:func:`davg`, :func:`dsum_wide`, :func:`davg_wide` are thin wrappers that
+take SQL text), so both engines compute the identical exact integer and
+parity is exact by construction (verified bit-for-bit at sf0.1, 600 k
+rows, and under ``SWEEP_SHUFFLE=7`` partitioning). One ``F.expr`` per
+aggregate is also one py4j command, where an equivalent Column-builder
+chain costs about twenty. Every step parses on both dialects, because some
+oracle texts (GROUPING SETS) also run through ``spark.sql``.
 """
 
 from __future__ import annotations
@@ -58,132 +65,93 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: Fixed-point resolution: 1e-6 — covers every money/measure column in the
-#: testdata (2–4 meaningful decimals) with headroom.
-_SCALE = 1_000_000.0
-
-#: Split modulus for the two-BIGINT accumulator (see module docstring).
+#: Fixed-point resolution 1e-6 — covers every money/measure column in the
+#: testdata (2–4 meaningful decimals) with headroom — and the split modulus
+#: 2^20 of the two-BIGINT accumulator, both as DOUBLE literals. Both dialects
+#: type ``1048576.0`` as DECIMAL(8,1): in Spark the per-row BIGINT ÷ literal
+#: would then run as decimal arithmetic (measured 1.8× slower end to end on
+#: TPC-H Q1), in DuckDB a decimal input would stay decimal and overflow at
+#: DECIMAL(18). ``CAST(n AS DOUBLE)`` is a DOUBLE in both.
+_SCALE = "CAST(1000000 AS DOUBLE)"
+_M_DOUBLE = "CAST(1048576 AS DOUBLE)"
 _M = 1 << 20
 
-#: Exact, overflow-safe accumulator for MATERIALIZED unit sums (mv.py).
-_ACC = "decimal(38,0)"
+#: Exact, overflow-safe accumulator: the wide form and MATERIALIZED state.
+_ACC = "DECIMAL(38,0)"
 
 
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+def sql_units(expr: str, acc: str = "BIGINT") -> str:
+    """Per-row fixed-point unit count, ``floor(x * 10^6 + 0.5)`` typed
+    ``acc`` (BIGINT, or ``_ACC`` for the wide accumulator). Exact for
+    |x| < 2^53 / 10^6. DuckDB's ``floor`` returns DOUBLE, so the cast
+    canonicalizes it to Spark's LONG ``floor``. The inner DOUBLE cast is
+    identity for double measures and the defined entry for DECIMAL source
+    columns (money-typed parquet, tests/test_decimal_sources.py)."""
+    return f"CAST(floor(CAST(({expr}) AS DOUBLE) * {_SCALE} + 0.5) AS {acc})"
 
 
-def _units(col: Column | str) -> Column:
-    """Double → BIGINT of fixed-point units (codegen-friendly canonical
-    round; exact for |x| < 2^53 / 10^6).
-
-    The input is cast to DOUBLE explicitly (round 7): identity for the
-    double measures the engine has always aggregated, and the defined
-    entry point for DECIMAL source columns (money-typed parquet). Spark
-    would coerce decimal×double to double implicitly anyway; the explicit
-    cast pins the semantics and mirrors ``sql_dsum``'s ``CAST(expr AS
-    DOUBLE)`` — DuckDB types the ``1000000.0`` literal as DECIMAL(8,1),
-    so without the cast a decimal input stays in decimal arithmetic there
-    and overflows at DECIMAL(18) (found by the decimal-lineitem fixture,
-    tests/test_decimal_sources.py)."""
-    return F.floor(_c(col).cast("double") * F.lit(_SCALE) + F.lit(0.5))
-
-
-def _units_dec(col: Column | str) -> Column:
-    """Units as DECIMAL(38,0) — the wide accumulator entry for materialized
-    re-aggregatable state (operators/mv.py)."""
-    return _units(col).cast(_ACC)
-
-
-def _split_sums(col: Column | str) -> tuple[Column, Column]:
-    """The two exact BIGINT partial sums (hi, lo) of a column's unit count."""
-    u = _units(col)
-    lo = F.pmod(u, F.lit(_M))
-    hi = ((u - lo) / F.lit(float(_M))).cast("long")  # /2^20 is exact (exponent shift)
-    return F.sum(hi), F.sum(lo)
-
-
-def _recombine(sum_hi: Column, sum_lo: Column) -> Column:
-    """Exact per-group recombination: units → double value.
-
-    The multiply is typed DECIMAL(31,0) × DECIMAL(7,0) → DECIMAL(38,0) so
-    BOTH engines keep the arithmetic in exact decimal (an untyped integer
-    literal would be legal too, but the product's decimal width then depends
-    on the dialect's literal-typing rules — pinning the operand types pins
-    the result type everywhere). sum_hi is BIGINT-bounded, well inside 31
-    digits; the product is ≤ ~10^25, well inside 38."""
-    total_units = sum_hi.cast("decimal(31,0)") * F.lit(_M).cast("decimal(7,0)") + sum_lo.cast(_ACC)
-    return total_units.cast("double") / F.lit(_SCALE)
-
-
-def dsum(col: Column | str) -> Column:
-    """Order-independent SUM over doubles (exact fixed-point accumulation)."""
-    sum_hi, sum_lo = _split_sums(col)
-    return _recombine(sum_hi, sum_lo)
-
-
-def davg(col: Column | str) -> Column:
-    """Order-independent AVG: exact unit sum ÷ exact count, one fp divide."""
-    sum_hi, sum_lo = _split_sums(col)
-    return (_recombine(sum_hi, sum_lo) / F.count(_c(col))).cast("double")
-
-
-def dsum_wide(col: Column | str) -> Column:
-    """Order-independent SUM via the wide DECIMAL(38,0) accumulator —
-    overflow-safe to 10^32 value units. ~1.6× slower per row than
-    :func:`dsum`; use for second moments (``dsum_wide(x*x)``) and any
-    measure whose per-row magnitude can exceed ~10^7 (see module
-    docstring's bound analysis)."""
-    return F.sum(_units_dec(col)).cast("double") / F.lit(_SCALE)
-
-
-def davg_wide(col: Column | str) -> Column:
-    """Order-independent AVG via the wide accumulator."""
-    return (
-        F.sum(_units_dec(col)).cast("double") / F.lit(_SCALE) / F.count(_c(col))
-    ).cast("double")
+def sql_from_units(units: str) -> str:
+    """Exact unit total → double value: one cast, one divide by 10^6 — a
+    deterministic function of an exact integer."""
+    return f"(CAST({units} AS DOUBLE) / {_SCALE})"
 
 
 def sql_dsum(expr: str) -> str:
-    """SQL mirror of ``dsum``. Every step is exact-by-construction in both
-    dialects: DuckDB's ``floor`` returns DOUBLE so the BIGINT cast
-    canonicalizes it to Spark's LONG ``floor``; ``%`` on BIGINT has
-    sign-of-dividend remainder semantics in both engines (the +M / %M wrap
-    makes it a pmod); the ``/ 1048576.0`` double division only shifts the
+    """Order-independent SUM via the split two-BIGINT accumulator. ``%`` on
+    BIGINT has sign-of-dividend remainder semantics in both engines (the
+    +M / %M wrap makes it a pmod); the divide by 2^20 only shifts the
     exponent (exact), and the double→BIGINT cast is exact because the
     quotient is integral (DuckDB rounds, Spark truncates — identical on
-    integral values). Some oracle texts (GROUPING SETS) also run through
-    ``spark.sql``, so this string must parse on both engines. The inner
-    ``CAST(expr AS DOUBLE)`` (round 7) is identity for double measures
-    and the decimal-source entry point — see :func:`_units` (DuckDB types
-    the ``1000000.0`` literal DECIMAL(8,1), so a decimal input would stay
-    in decimal arithmetic and overflow)."""
-    u = f"CAST(floor(CAST(({expr}) AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)"
-    lo = f"((({u}) % 1048576) + 1048576) % 1048576"
-    hi = f"CAST((({u}) - ({lo})) / 1048576.0 AS BIGINT)"
-    return (
-        f"(CAST(CAST(SUM({hi}) AS DECIMAL(31,0)) * CAST(1048576 AS DECIMAL(7,0))"
-        f" + CAST(SUM({lo}) AS DECIMAL(38,0)) AS DOUBLE) / 1000000.0)"
+    integral values). The per-group recombine is typed DECIMAL(31,0) ×
+    DECIMAL(7,0) → DECIMAL(38,0) so both engines keep it in exact decimal
+    whatever their literal-typing rules; sum_hi is BIGINT-bounded and the
+    product is ≤ ~10^25."""
+    u = sql_units(expr)
+    lo = f"((({u}) % {_M}) + {_M}) % {_M}"
+    hi = f"CAST((({u}) - ({lo})) / {_M_DOUBLE} AS BIGINT)"
+    return sql_from_units(
+        f"CAST(SUM({hi}) AS DECIMAL(31,0)) * CAST({_M} AS DECIMAL(7,0))"
+        f" + CAST(SUM({lo}) AS {_ACC})"
     )
 
 
 def sql_davg(expr: str) -> str:
-    """SQL mirror of ``davg``."""
+    """Order-independent AVG: exact unit sum ÷ exact count, one fp divide."""
     return f"CAST({sql_dsum(expr)} / COUNT({expr}) AS DOUBLE)"
 
 
 def sql_dsum_wide(expr: str) -> str:
-    """SQL mirror of ``dsum_wide`` (single DECIMAL(38,0) accumulator).
-    Inner DOUBLE cast: see :func:`sql_dsum`."""
-    return (
-        f"(CAST(SUM(CAST(floor(CAST(({expr}) AS DOUBLE) * 1000000.0 + 0.5)"
-        " AS DECIMAL(38,0))) AS DOUBLE) / 1000000.0)"
-    )
+    """Order-independent SUM via the single DECIMAL(38,0) accumulator —
+    overflow-safe to 10^32 value units, ~1.6× slower per row than
+    :func:`sql_dsum`. For second moments (``x * x``) and any measure whose
+    per-row magnitude can exceed ~10^7 (see the bounds above)."""
+    return sql_from_units(f"SUM({sql_units(expr, _ACC)})")
 
 
 def sql_davg_wide(expr: str) -> str:
-    """SQL mirror of ``davg_wide``."""
+    """Order-independent AVG via the wide accumulator."""
     return f"CAST({sql_dsum_wide(expr)} / COUNT({expr}) AS DOUBLE)"
+
+
+def dsum(expr: str) -> Column:
+    """:func:`sql_dsum` as a Column; ``expr`` is SQL text (a column name
+    or an expression over the frame's columns)."""
+    return F.expr(sql_dsum(expr))
+
+
+def davg(expr: str) -> Column:
+    """:func:`sql_davg` as a Column."""
+    return F.expr(sql_davg(expr))
+
+
+def dsum_wide(expr: str) -> Column:
+    """:func:`sql_dsum_wide` as a Column."""
+    return F.expr(sql_dsum_wide(expr))
+
+
+def davg_wide(expr: str) -> Column:
+    """:func:`sql_davg_wide` as a Column."""
+    return F.expr(sql_davg_wide(expr))
 
 
 def fixed_point_join(col: Column | str, scale: int = 1_000_000) -> Column:
@@ -210,7 +178,7 @@ def fixed_point_join(col: Column | str, scale: int = 1_000_000) -> Column:
     inf = float("inf")
     return F.array_join(
         F.transform(
-            _c(col),
+            col,
             lambda x: F.when(x.isNull(), F.lit("null"))
             .when(F.isnan(x), F.lit("nan"))
             .when(x == F.lit(inf), F.lit("inf"))

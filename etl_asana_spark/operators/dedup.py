@@ -10,7 +10,8 @@ same shuffle cost as dropDuplicates, deterministic result.
 Fuzzy families, all linear-ish by blocking (never all-pairs at scale):
 
 - MinHash LSH   — Jaccard near-dups; banding turns O(n²) into a shuffle on
-                  hash buckets (pyspark.ml MinHashLSH, fixed seed).
+                  hash buckets (engine-neutral hash family, replayable in
+                  SQL — ``minhash_portable_pairs``).
 - SimHash       — 64-bit weighted-bit signature; candidate pairs via 16-bit
                   band equality, verified by Hamming distance. Pure Catalyst
                   expressions (xxhash64 + bit ops), no ml dependency.
@@ -71,7 +72,7 @@ def unshingleable_count(
 ) -> int:
     """Count docs too short to shingle (< ``shingle_n`` whitespace tokens).
 
-    ``minhash_lsh_pairs`` / ``simhash_signatures`` silently EXCLUDE such
+    ``minhash_portable_pairs`` / ``simhash_signatures`` silently EXCLUDE such
     docs from pairing (no feature set → cannot collide); call this to
     detect a corpus dominated by unshingleable docs, where the fuzzy-dedup
     families would quietly return near-empty pair sets. NULL text counts
@@ -162,10 +163,15 @@ def _collapsed_pairs(
     payload_name: str,
     emit_intra: bool,
 ) -> DataFrame:
-    """The exact-duplicate collapse shared by all four text pair families:
+    """The exact-duplicate collapse shared by the text pair families:
     one representative per distinct text → ``naive_fn`` over reps → expand
     rep pairs to member pairs → within-group pairs for groups the naive
-    form would self-pair.
+    form would self-pair. Output is bit-identical to the naive form, but
+    the blocking joins stay linear in DISTINCT texts. Without it a
+    duplicate-heavy corpus (the normal case for web crawl) makes every
+    bucket quadratic in copy multiplicity — measured by the round-4
+    ``scale_rehearsal`` 30×-duplication run: 160× cost for 30× data
+    (636 s), vs output-linear after collapse.
 
     Single-sourced so the per-family pieces that MUST stay mutually
     consistent live at one call site each: ``naive_fn(reps)`` returns the
@@ -174,8 +180,8 @@ def _collapsed_pairs(
     the naive featurizer's pairing capability against the group text
     ``vec``; ``emit_intra`` mirrors the naive form's threshold boundary
     (identical texts sit AT self-distance, and whether the naive filter
-    emits them there is family-specific — strict ``<`` for MinHash's
-    ``approxSimilarityJoin``, inclusive for the Hamming/Jaccard filters).
+    emits them there is family-specific — strict ``<`` for the MinHash
+    distance filter, inclusive for the Hamming/Jaccard filters).
     The review of the original four hand-expanded copies found exactly the
     drift this prevents: three copies had the boundary guard, minhash
     didn't."""
@@ -191,102 +197,6 @@ def _collapsed_pairs(
         pairable=pairable, payload=payload, payload_name=payload_name,
     )
     return cross.unionByName(intra)
-
-
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    jaccard_threshold: float = 0.5,
-    num_hash_tables: int = 5,
-    num_features: int = 1 << 18,
-    shingle_n: int = 3,
-    seed: int = 42,
-    collapse: bool = True,
-) -> DataFrame:
-    """Near-duplicate pairs by MinHash LSH over hashed SHINGLE sets —
-    shingle → minhash → band, the canonical web-scale text-dedup shape.
-
-    Returns (id_a, id_b, jaccard_dist) with id_a < id_b and
-    jaccard_dist < 1 - threshold (the ``approxSimilarityJoin`` candidate
-    filter is strict). Banding keeps the join linear in
-    colliding candidates, and shingling is what keeps the collision rate
-    honest: Jaccard over word-VOCABULARY sets (the naive featurization)
-    degenerates on a shared-vocabulary corpus — measured here, 8.5M
-    candidate pairs from 5 000 docs (68% of all pairs) at sf0.1, i.e. a
-    quadratic blowup smuggled through a linear-shaped operator. Jaccard
-    over ``shingle_n``-word shingle sets keeps only true near-dup text.
-    Docs too short to shingle (< ``shingle_n`` words) have no feature set
-    and cannot pair — use :func:`unshingleable_count` to measure how many
-    docs a given corpus silently excludes.
-
-    ``collapse=True`` (the default) runs the LSH pipeline over one
-    REPRESENTATIVE per distinct text and expands rep pairs back to member
-    pairs by join — bit-identical output (features/hashes depend only on
-    the text, so copies collide with exactly the pairs their rep does, at
-    distance 0 within a group), but the bucket joins stay linear in
-    DISTINCT texts. Without it, a duplicate-heavy corpus (the normal case
-    for web crawl) makes every LSH bucket quadratic in copy multiplicity —
-    measured by the round-4 ``scale_rehearsal`` 30×-duplication run: 160×
-    cost for 30× data (636 s), vs output-linear after collapse.
-    ``collapse=False`` keeps the naive formulation as the differential
-    oracle for tests.
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH, NGram, RegexTokenizer
-
-    if collapse:
-        # Identical texts have Jaccard distance exactly 0 and always share
-        # every LSH bucket — but approxSimilarityJoin's candidate filter is
-        # STRICT (dist < 1 - threshold, verified against the installed
-        # spark-mllib bytecode), so the naive form emits the within-group
-        # pairs iff jaccard_threshold < 1.0.
-        return _collapsed_pairs(
-            docs, id_col, text_col,
-            naive_fn=lambda reps: minhash_lsh_pairs(
-                reps, id_col, text_col, jaccard_threshold, num_hash_tables,
-                num_features, shingle_n, seed, collapse=False,
-            ),
-            pairable=_run_split_size("vec") >= shingle_n,
-            payload=F.lit(0.0), payload_name="jaccard_dist",
-            emit_intra=jaccard_threshold < 1.0,
-        )
-
-    # RegexTokenizer on whitespace RUNS (plain Tokenizer splits on single
-    # "\\s" and keeps interior empty tokens, so "a  b" would grow a
-    # phantom shingle and diverge from unshingleable_count's run-split
-    # diagnostic).
-    tok = RegexTokenizer(inputCol=text_col, outputCol="__toks", pattern=r"\s+")
-    ng = NGram(n=shingle_n, inputCol="__toks", outputCol="__shingles")
-    tf = HashingTF(
-        inputCol="__shingles", outputCol="__features",
-        numFeatures=num_features, binary=True,
-    )
-    # NULL text is outside the pairing domain, like docs too short to
-    # shingle (ML Tokenizer throws on NULL input).
-    shingled = ng.transform(
-        tok.transform(
-            docs.select(id_col, text_col).filter(F.col(text_col).isNotNull())
-        )
-    )
-    featurized = tf.transform(
-        shingled.filter(F.size("__shingles") > 0)  # MinHash needs ≥1 feature
-    )
-    lsh = MinHashLSH(
-        inputCol="__features", outputCol="__hashes", numHashTables=num_hash_tables, seed=seed
-    )
-    model = lsh.fit(featurized)
-    pairs = model.approxSimilarityJoin(
-        featurized, featurized, 1.0 - jaccard_threshold, distCol="jaccard_dist"
-    )
-    return (
-        pairs.select(
-            F.col(f"datasetA.{id_col}").alias("id_a"),
-            F.col(f"datasetB.{id_col}").alias("id_b"),
-            F.col("jaccard_dist"),
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .distinct()
-    )
 
 
 #: Portable-MinHash constants (engine-neutral, reproducible in SQL).
@@ -419,10 +329,9 @@ def minhash_portable_pairs(
     collapse: bool = True,
     batched_sig: bool = False,
 ) -> DataFrame:
-    """MinHash-LSH near-dup pairs with an ENGINE-NEUTRAL hash family — the
-    SQL-oracle-checkable twin of :func:`minhash_lsh_pairs` (same upgrade
-    path as the round-5 poly_hash fingerprint: the registered key runs
-    this; the xxhash64/MLlib pipeline stays the library fast path).
+    """MinHash-LSH near-dup pairs with an ENGINE-NEUTRAL hash family, so
+    a DuckDB oracle replays it (the same move as the round-5 poly_hash
+    fingerprint; MLlib's xxhash64-seeded MinHashLSH has no SQL twin).
 
     Shingle base hashes are Rabin-Karp ``poly_hash mod P`` (P = 2^31-1);
     the five permutations are ``(a_i·x + b_i) mod P`` with fixed published
@@ -858,7 +767,7 @@ def simhash_pairs(
     representative before banding and rep pairs expand back by join
     (identical texts: Hamming 0, always emitted when the doc can shingle).
     Same bit-identical-output argument and the same measured motivation as
-    :func:`minhash_lsh_pairs`; ``collapse=False`` keeps the naive
+    :func:`_collapsed_pairs`; ``collapse=False`` keeps the naive
     formulation as the differential oracle.
     """
     if collapse:
@@ -934,7 +843,7 @@ def ngram_jaccard_pairs(
     identical texts have Jaccard exactly 1.0 and pair iff they have ≥ 1
     shingle) — the shared-shingle join otherwise goes quadratic in copy
     multiplicity on a duplicate-heavy corpus, the same measured class as
-    :func:`minhash_lsh_pairs`. ``collapse=False`` is the differential
+    :func:`_collapsed_pairs`. ``collapse=False`` is the differential
     oracle.
     """
     from .text import shingles
@@ -2239,7 +2148,7 @@ def prefix_filter_jaccard_pairs(
     ``collapse=True`` (default) collapses byte-identical texts first —
     copies would otherwise pair each other through their rare prefix
     shingles, quadratic in copy multiplicity (the same measured class as
-    :func:`minhash_lsh_pairs`). Same bit-identical-output argument: the
+    :func:`_collapsed_pairs`). Same bit-identical-output argument: the
     ranking/prefix/verify all depend only on the text, with one
     refinement — corpus document frequency is counted over DISTINCT texts,
     which only changes candidate PRUNING order, never the verified answer

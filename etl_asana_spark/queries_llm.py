@@ -115,10 +115,8 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes mod 2^31-1 and five fixed LCG permutations instead of MLlib's
     JVM-seeded MinHashLSH — which DuckDB replays hash-for-hash
     (``_minhash_oracle_sql``; the same upgrade path as
-    q_text_fingerprint's xxhash64→poly_hash in round 5).
-    ``minhash_lsh_pairs`` (MLlib, xxhash64) stays the library fast path;
-    its precision remains property-checked vs exact shingle Jaccard in
-    tests, and the two families' candidate recall is compared there too."""
+    q_text_fingerprint's xxhash64→poly_hash in round 5). Its precision is
+    property-checked vs exact shingle Jaccard in tests."""
     import os
 
     from .fsutil import local_input_bytes
@@ -241,7 +239,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_ngram",
-    oracle="""
+    oracle=r"""
     WITH toks AS (
         SELECT doc_id, regexp_split_to_array(text, '\s+') AS t
         FROM documents WHERE lang = 'fr'
@@ -441,8 +439,7 @@ def q_sim_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered key runs ``ann_portable_topk`` — deterministic ±1-LCG
     hyperplanes instead of MLlib's JVM-seeded gaussians, same table
     count/bucket length — which DuckDB replays projection-for-projection
-    (``_ann_oracle_sql``). ``ann_brp_lsh`` (MLlib) stays the library
-    path; recall vs exact top-k remains property-tested for both.
+    (``_ann_oracle_sql``). Recall vs exact top-k is property-tested.
     Soundness (floor-bucket margins, rank gaps vs drift) is probed by
     scripts/margin_probe.py."""
     t = load_tables(spark, sf_dir)
@@ -584,8 +581,7 @@ def q_emb_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     that is a pure deterministic function of the data, replayed
     CTE-for-CTE by the oracle (``_pca_power_cte_sql``; same upgrade path
     as q_text_fingerprint's xxhash64→poly_hash and q_emb_kmeans' Lloyd
-    CTE in round 5). ``pca_reduce`` (MLlib/LAPACK, solver-specific
-    eigenbasis) remains the library path. Decreasing projected variance
+    CTE in round 5). Decreasing projected variance
     holds by construction (components are λ̂-sorted; the projected
     variance of a unit direction IS its Rayleigh quotient) and stays
     property-tested in tests/test_llm_ops.py; numeric soundness of the
@@ -611,7 +607,7 @@ def q_emb_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_tokens",
-    oracle="""
+    oracle=r"""
     SELECT token, COUNT(*) AS freq, COUNT(DISTINCT doc_id) AS doc_freq
     FROM (
         SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS token
@@ -635,7 +631,7 @@ def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_tfidf",
-    oracle="""
+    oracle=r"""
     WITH tokens AS (
         SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS token
         FROM documents WHERE lang = 'es'
@@ -674,7 +670,7 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_stats",
-    oracle="""
+    oracle=r"""
     SELECT doc_id,
            length(text) AS n_chars_measured,
            n_chars AS n_chars_declared,
@@ -703,11 +699,11 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_quality",
-    oracle="""
+    oracle=r"""
     SELECT doc_id,
            CAST(length(text) AS BIGINT) AS n_chars,
            CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT) AS n_words,
-           ROUND(CAST(length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g'))
+           ROUND(CAST(length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g'))
                  AS DOUBLE) / length(text), 8) AS punct_ratio,
            ROUND(CAST(len(list_filter(regexp_split_to_array(text, '\s+'),
                      t -> t IN ('the','of','and','to','in','is','that','for')))
@@ -758,7 +754,7 @@ def _stopword_values_sql() -> str:
 
 @register(
     "q_text_langid",
-    oracle=f"""
+    oracle=rf"""
     WITH stop(lang_cand, w) AS (VALUES {_stopword_values_sql()}),
     toks AS (
         SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS w FROM documents
@@ -799,7 +795,7 @@ def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_fingerprint",
-    oracle="""
+    oracle=r"""
     WITH toks AS (
         SELECT doc_id, text, regexp_split_to_array(text, '\s+') AS t FROM documents
     ), sh AS (
@@ -1171,7 +1167,7 @@ def q_cap_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_hist_tokens",
-    oracle="""
+    oracle=r"""
     SELECT CAST(floor(len(regexp_split_to_array(text, '\s+')) / 10) * 10 AS BIGINT) AS bucket_lo,
            COUNT(*) AS n_docs,
            CAST(MIN(len(regexp_split_to_array(text, '\s+'))) AS BIGINT) AS min_words,
@@ -1227,7 +1223,7 @@ def q_text_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_clusters",
-    oracle="""
+    oracle=r"""
     WITH RECURSIVE pairs AS MATERIALIZED (
         WITH toks AS (
             SELECT doc_id, regexp_split_to_array(text, '\s+') AS t
@@ -1309,7 +1305,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_mix_corpus",
-    oracle="""
+    oracle=r"""
     WITH stats AS (
         SELECT source,
                CAST(SUM(len(regexp_split_to_array(text, '\s+'))) AS DOUBLE) AS src_tokens
@@ -1363,7 +1359,7 @@ def q_mix_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_pack_sequences",
-    oracle="""
+    oracle=r"""
     WITH RECURSIVE docs AS MATERIALIZED (
         SELECT doc_id, len(regexp_split_to_array(text, '\s+')) AS tok, doc_id % 8 AS b
         FROM documents
@@ -1425,7 +1421,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_contamination",
-    oracle="""
+    oracle=r"""
     WITH bench AS (
         SELECT doc_id AS bench_id, text FROM documents
         WHERE (doc_id * 2654435761) % 4294967296 % 50 = 7
@@ -1517,7 +1513,7 @@ def q_scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_repetition_score",
-    oracle="""
+    oracle=r"""
     WITH sh AS (
         SELECT doc_id, unnest(
             [t[i] || ' ' || t[i+1] || ' ' || t[i+2]
@@ -1555,7 +1551,7 @@ def q_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_chunk_docs",
-    oracle="""
+    oracle=r"""
     WITH toks AS (
         SELECT doc_id, regexp_split_to_array(text, '\s+') AS t FROM documents
     )
@@ -1679,7 +1675,7 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_inverted_index",
-    oracle="""
+    oracle=r"""
     WITH toks AS (
         SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS token
         FROM documents WHERE lang = 'en'
@@ -1723,7 +1719,7 @@ def q_text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dup_ngram_fraction",
-    oracle="""
+    oracle=r"""
     WITH toks AS (
         SELECT doc_id, regexp_split_to_array(text, '\s+') AS t
         FROM documents WHERE lang = 'es'
@@ -2004,8 +2000,7 @@ def q_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-scratch deterministic ``kmeans_lloyd`` — the same fit the
     q_dedup_semantic oracle already replays via the Lloyd-fixpoint CTE —
     so the full probe-and-score pipeline is DuckDB-replayable
-    (``_ivf_oracle_sql``). ``ivf_topk`` (MLlib KMeans, seeded init) stays
-    the library path. Uniform-random vectors remain IVF's worst case
+    (``_ivf_oracle_sql``). Uniform-random vectors remain IVF's worst case
     (neighbors scatter across cells); recall vs exact top-k is
     property-tested, and ranking-boundary margins are probed by
     scripts/margin_probe.py."""
@@ -2150,7 +2145,7 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_prefix",
-    oracle="""
+    oracle=r"""
     WITH toks AS (
         SELECT doc_id, regexp_split_to_array(text, '\s+') AS t
         FROM documents WHERE lang = 'fr'
@@ -2465,7 +2460,7 @@ def q_sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_quality_gopher",
-    oracle="""
+    oracle=r"""
     WITH feats AS (
         SELECT doc_id, lang,
                len(regexp_split_to_array(text, '\s+')) AS n_words,
@@ -2528,7 +2523,7 @@ def q_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_vocab_oov",
-    oracle="""
+    oracle=r"""
     WITH toks AS (
         SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS token
         FROM documents WHERE lang = 'en'
@@ -2586,7 +2581,7 @@ def q_text_vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dsir_weights",
-    oracle="""
+    oracle=r"""
     WITH toks AS (
         SELECT doc_id, lang, unnest(regexp_split_to_array(text, '\s+')) AS token
         FROM documents
@@ -2702,7 +2697,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_scrub_dup_spans",
-    oracle="""
+    oracle=r"""
     WITH toks AS (
         SELECT doc_id, regexp_split_to_array(text, '\s+') AS t
         FROM documents WHERE lang = 'de'
@@ -2900,7 +2895,7 @@ def q_dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_entropy",
-    oracle="""
+    oracle=r"""
     WITH toks AS (
         SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS token
         FROM documents

@@ -73,19 +73,17 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the closed-form combinations are evaluated on the exact sums with
     the identical expression tree on both engines: deterministic at any
     parallelism, and still one shuffle."""
-    x = F.col("l_quantity")
-    y = F.col("l_extendedprice")
     m = (
         load_tables(spark, sf_dir)["lineitem"]
         .groupBy("l_returnflag")
         .agg(
             F.count("*").alias("n_rows"),
             F.count("*").cast("double").alias("n"),
-            dsum(x).alias("sx"),
-            dsum(y).alias("sy"),
-            dsum_wide(x * y).alias("sxy"),
-            dsum_wide(x * x).alias("sxx"),
-            dsum_wide(y * y).alias("syy"),
+            dsum("l_quantity").alias("sx"),
+            dsum("l_extendedprice").alias("sy"),
+            dsum_wide("l_quantity * l_extendedprice").alias("sxy"),
+            dsum_wide("l_quantity * l_quantity").alias("sxx"),
+            dsum_wide("l_extendedprice * l_extendedprice").alias("syy"),
         )
     )
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
@@ -319,7 +317,7 @@ def q_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_join_fuzzy",
-    oracle="""
+    oracle=r"""
     WITH names AS (SELECT DISTINCT p_name AS name FROM part)
     SELECT a.name AS name_a, b.name AS name_b,
            CAST(levenshtein(a.name, b.name) AS INT) AS dist
@@ -648,15 +646,14 @@ def q_agg_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(ry), F.col("v") == F.col("l_discount"))
         .select("r_x", "r_y")
     )
-    x, y = F.col("r_x"), F.col("r_y")
     m = ranked.agg(
         F.count("*").alias("n_rows"),
         F.count("*").cast("double").alias("n"),
-        dsum(x).alias("sx"),
-        dsum(y).alias("sy"),
-        dsum_wide(x * y).alias("sxy"),
-        dsum_wide(x * x).alias("sxx"),
-        dsum_wide(y * y).alias("syy"),
+        dsum("r_x").alias("sx"),
+        dsum("r_y").alias("sy"),
+        dsum_wide("r_x * r_y").alias("sxy"),
+        dsum_wide("r_x * r_x").alias("sxx"),
+        dsum_wide("r_y * r_y").alias("syy"),
     )
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     sxy, sxx, syy = F.col("sxy"), F.col("sxx"), F.col("syy")
@@ -907,9 +904,7 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-                "revenue"
-            ),
+            dsum("l_extendedprice * (1 - l_discount)").alias("revenue"),
         )
     )
 
@@ -1084,11 +1079,10 @@ def q_zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression tree on both engines.
     """
     t = load_tables(spark, sf_dir)
-    bal = F.col("c_acctbal")
     stats = t["customer"].groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        dsum(bal).alias("sx"),
-        dsum_wide(bal * bal).alias("sxx"),
+        dsum("c_acctbal").alias("sx"),
+        dsum_wide("c_acctbal * c_acctbal").alias("sxx"),
     )
     n, sx, sxx = F.col("n"), F.col("sx"), F.col("sxx")
     std = F.sqrt((sxx - ((sx * sx) / n)) / (n - F.lit(1.0)))
@@ -1099,6 +1093,6 @@ def q_zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_custkey",
             "c_mktsegment",
             "c_acctbal",
-            F.round((bal - (sx / n)) / std, 8).alias("bal_z"),
+            F.round((F.col("c_acctbal") - (sx / n)) / std, 8).alias("bal_z"),
         )
     )

@@ -290,15 +290,20 @@ def _ema_batches(batches):
     the tail to NULL instead) would make the kernel state richer than
     one float only when a NaN-bearing group also straddles a batch
     boundary; NULL user_ids keep their own group (``dropna=False``),
-    matching Spark's grouping semantics.
+    matching Spark's grouping semantics, and carry like any other user
+    (NULL matches NULL here, where ``==`` on NaN would restart the EMA).
     """
+    carried = False
     last_user = None
     last_ema = None
     for pdf in batches:
         if not len(pdf):
             continue
-        prepended = (
-            last_user is not None and pdf["user_id"].iloc[0] == last_user
+        first = pdf["user_id"].iloc[0]
+        prepended = carried and (
+            pd.isna(first) and pd.isna(last_user)
+            if pd.isna(first) or pd.isna(last_user)
+            else first == last_user
         )
         if prepended:
             head = pd.DataFrame(
@@ -321,6 +326,7 @@ def _ema_batches(batches):
         out["ema"] = ema
         if prepended:
             out = out.iloc[1:]
+        carried = True
         last_user = pdf["user_id"].iloc[-1]
         last_ema = ema[-1]
         yield out

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import register
-from .functions.parity import dsum, sql_dsum
+from .functions.parity import dsum, sql_dsum, sql_dsum_wide
 from .operators import topk
 from .registry import load_tables
 
@@ -412,11 +412,9 @@ def q_win_nav(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_win_ratio_to_report",
-    oracle="""
+    oracle=f"""
     WITH nat AS (
-        SELECT n_name, r_name,
-               CAST(SUM(CAST(floor(o_totalprice * 1000000.0 + 0.5)
-                             AS DECIMAL(38,0))) AS DOUBLE) / 1000000.0 AS revenue
+        SELECT n_name, r_name, {sql_dsum_wide('o_totalprice')} AS revenue
         FROM orders
         JOIN customer ON c_custkey = o_custkey
         JOIN nation   ON n_nationkey = c_nationkey

@@ -1,8 +1,7 @@
 """Round-11 candidate probe: noop-timed engine cost of the remaining
 high-cost untouched keys (guide §1.4: time the computation, not the sink).
 
-Per key: one warm-up, then min-of-3 noop writes; prints seconds + the job
-count observed via the status tracker so fixed-overhead job chains show up.
+Per key: one warm-up, then min-of-3 noop writes; prints the seconds.
 """
 from __future__ import annotations
 
@@ -35,14 +34,11 @@ def main() -> int:
     spark = build_session(app_name="r11-candidates-probe")
     spark.sparkContext.setLogLevel("ERROR")
     qs = catalog.queries()
-    tracker = spark.sparkContext.statusTracker()
     for key in KEYS:
         fn = qs[key]
         spark.sparkContext.setJobDescription(f"probe:{key}")
         # warm-up (untimed)
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = float("inf")
-        jobs0 = len(tracker.getJobIdsForGroup() or [])
         times = []
         for _ in range(3):
             t0 = time.perf_counter()

@@ -4,7 +4,7 @@ Spark plans COUNT(DISTINCT user_id) alongside other aggregates via Expand
 (every input row duplicated per aggregate group: 2x rows through the first
 partial aggregate). The manual two-level decomposition groups by
 (window, event_type, user_id) first (one row per distinct triple, carrying
-the partial count and dsum accumulators), then by (window, event_type) —
+the partial count and exact unit sum), then by (window, event_type) —
 same two shuffles, no Expand, and the first shuffle moves one row per
 distinct triple instead of two expanded streams.
 
@@ -28,26 +28,26 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from etl_asana_spark import catalog
-from etl_asana_spark.functions.parity import _recombine, _split_sums
+from etl_asana_spark.functions.parity import sql_from_units, sql_units
 from etl_asana_spark.registry import load_tables
 from etl_asana_spark.session import build_session
 
 
 def two_level(ev):
-    hi, lo = _split_sums("value")
     lvl1 = ev.groupBy(
         F.window("ts", "1 hour").alias("win"), "event_type", "user_id"
     ).agg(
         F.count(F.lit(1)).alias("__c"),
-        hi.alias("__h"),
-        lo.alias("__l"),
+        F.expr(f"SUM({sql_units('value')})").alias("__u"),
     )
     return (
         lvl1.groupBy("win", "event_type")
         .agg(
             F.sum("__c").alias("n_events"),
             F.count(F.lit(1)).alias("n_users"),
-            _recombine(F.sum("__h"), F.sum("__l")).alias("total_value"),
+            F.expr(sql_from_units("SUM(CAST(__u AS DECIMAL(38,0)))")).alias(
+                "total_value"
+            ),
         )
         .select(
             F.col("win.start").alias("bucket"),

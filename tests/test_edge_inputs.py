@@ -17,7 +17,7 @@ from etl_asana_spark.operators.dedup import (
     connected_components,
     dedup_clusters,
     dedup_exact,
-    minhash_lsh_pairs,
+    minhash_portable_pairs,
     ngram_jaccard_pairs,
 )
 from etl_asana_spark.operators.joins import asof_join
@@ -66,7 +66,7 @@ def test_fuzzy_pair_generators_on_empty_corpus(spark):
 
     docs = _empty_docs(spark)
     assert ngram_jaccard_pairs(docs, n=3, threshold=0.1).collect() == []
-    assert minhash_lsh_pairs(docs, jaccard_threshold=0.5).collect() == []
+    assert minhash_portable_pairs(docs, jaccard_threshold=0.5).collect() == []
     assert simhash_pairs(docs).collect() == []
 
 

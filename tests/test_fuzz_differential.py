@@ -51,6 +51,7 @@ class Agg:
     name: str
     col: Column
     sql: str
+    units: bool = False  # output crosses as parity.sql_units of the value
 
 
 def _preds(rng: random.Random, joined: bool) -> list[Pred]:
@@ -133,7 +134,7 @@ def _aggs(rng: random.Random) -> list[Agg]:
         Agg("sum_qty", parity.dsum("l_quantity"), parity.sql_dsum("l_quantity")),
         Agg(
             "rev",
-            parity.dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))),
+            parity.dsum("l_extendedprice * (1 - l_discount)"),
             parity.sql_dsum("l_extendedprice * (1 - l_discount)"),
         ),
         Agg(
@@ -259,8 +260,7 @@ def gen_window_shape(seed: int) -> WinShape:
         else f"ORDER BY {_WIN_ORDER_SQL}"
     )
     cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    units = F.floor(F.col("o_totalprice") * 1_000_000.0 + 0.5)
-    sql_units = "CAST(floor(o_totalprice * 1000000.0 + 0.5) AS BIGINT)"
+    sql_units = parity.sql_units("o_totalprice")
     pool = [
         Agg("rn", F.row_number().over(w), f"ROW_NUMBER() OVER ({over})"),
         # the r02 class: windowed SUM of integers MUST be cast on the
@@ -273,7 +273,7 @@ def gen_window_shape(seed: int) -> WinShape:
         # fixed-point cumulative revenue, exposed as exact BIGINT units
         Agg(
             "cum_rev_units",
-            F.sum(units).over(cum),
+            F.sum(F.expr(sql_units)).over(cum),
             f"CAST(SUM({sql_units}) OVER ({over} {_ROWS_CUM}) AS BIGINT)",
         ),
         Agg(
@@ -947,35 +947,27 @@ def test_random_asof_parity(spark, duck, sf_dir, seed):
 def _vec_pool(rng: random.Random) -> list[Agg]:
     k = rng.randint(2, 16)
     thr = rng.randint(-20, 20) / 100.0
-    fp = "CAST(floor({} * 1000000.0 + 0.5) AS BIGINT)"
     x2d = "CAST(x AS DOUBLE)"
-
-    def units(col: Column) -> Column:
-        return F.floor(col * 1_000_000.0 + F.lit(0.5)).cast("long")
-
     e_dbl = F.transform("embedding", lambda x: x.cast("double"))
     pool = [
         Agg("dim", F.size("embedding").cast("long"), "CAST(len(embedding) AS BIGINT)"),
         Agg(
             "sumsq_units",
-            units(
-                F.aggregate(
-                    e_dbl, F.lit(0.0), lambda acc, x: acc + x * x
-                )
-            ),
-            fp.format(
-                f"list_sum(list_transform(embedding, x -> {x2d} * {x2d}))"
-            ),
+            F.aggregate(e_dbl, F.lit(0.0), lambda acc, x: acc + x * x),
+            f"list_sum(list_transform(embedding, x -> {x2d} * {x2d}))",
+            units=True,
         ),
         Agg(
             "max_units",
-            units(F.array_max(e_dbl)),
-            fp.format(f"list_max(list_transform(embedding, x -> {x2d}))"),
+            F.array_max(e_dbl),
+            f"list_max(list_transform(embedding, x -> {x2d}))",
+            units=True,
         ),
         Agg(
             "min_units",
-            units(F.array_min(e_dbl)),
-            fp.format(f"list_min(list_transform(embedding, x -> {x2d}))"),
+            F.array_min(e_dbl),
+            f"list_min(list_transform(embedding, x -> {x2d}))",
+            units=True,
         ),
         Agg(
             "n_above",
@@ -984,20 +976,16 @@ def _vec_pool(rng: random.Random) -> list[Agg]:
         ),
         Agg(
             "head_sum_units",
-            units(
-                F.aggregate(
-                    F.slice(e_dbl, 1, k), F.lit(0.0), lambda acc, x: acc + x
-                )
-            ),
-            fp.format(
-                "list_sum(list_transform("
-                f"list_slice(embedding, 1, {k}), x -> {x2d}))"
-            ),
+            F.aggregate(F.slice(e_dbl, 1, k), F.lit(0.0), lambda acc, x: acc + x),
+            "list_sum(list_transform("
+            f"list_slice(embedding, 1, {k}), x -> {x2d}))",
+            units=True,
         ),
         Agg(
             "last_unit",
-            units(F.element_at(e_dbl, -1)),
-            fp.format("CAST(embedding[-1] AS DOUBLE)"),
+            F.element_at(e_dbl, -1),
+            "CAST(embedding[-1] AS DOUBLE)",
+            units=True,
         ),
     ]
     return pool
@@ -1021,13 +1009,24 @@ def run_vec_spark(spark, sf_dir: str, s: VecShape) -> DataFrame:
     df = load_tables(spark, sf_dir)["embeddings"]
     if s.mod > 1:
         df = df.filter(F.col("vec_id") % s.mod == 0)
-    return df.select("vec_id", *[e.col.alias(e.name) for e in s.exprs])
+    raw = df.select("vec_id", *[e.col.alias(e.name) for e in s.exprs])
+    return raw.select(
+        "vec_id",
+        *[
+            F.expr(parity.sql_units(e.name)).alias(e.name) if e.units else e.name
+            for e in s.exprs
+        ],
+    )
 
 
 def vec_sql(s: VecShape) -> str:
     where = f" WHERE vec_id % {s.mod} = 0" if s.mod > 1 else ""
     select = ", ".join(
-        ["vec_id"] + [f"{e.sql} AS {e.name}" for e in s.exprs]
+        ["vec_id"]
+        + [
+            f"{parity.sql_units(e.sql) if e.units else e.sql} AS {e.name}"
+            for e in s.exprs
+        ]
     )
     return f"SELECT {select} FROM embeddings{where}"
 
@@ -1886,16 +1885,10 @@ def test_random_text_collapse_parity(spark, seed):
     )
 
     family = rng.choice(
-        ["minhash", "minhash_portable", "simhash", "simhash_portable",
+        ["minhash_portable", "simhash", "simhash_portable",
          "ngram", "prefix", "clusters"]
     )
-    if family == "minhash":
-        kw = dict(
-            jaccard_threshold=rng.choice([0.2, 0.5, 0.9, 1.0]),
-            shingle_n=rng.choice([2, 3]),
-        )
-        fn, cols = _dedup.minhash_lsh_pairs, ["id_a", "id_b", "jaccard_dist"]
-    elif family == "minhash_portable":
+    if family == "minhash_portable":
         kw = dict(
             jaccard_threshold=rng.choice([0.2, 0.5, 0.9, 1.0]),
             shingle_n=rng.choice([2, 3]),

@@ -105,31 +105,6 @@ def test_simhash_batched_signatures_are_bit_identical(spark, sf_dir):
     assert pairs(False) == pairs(True)
 
 
-def test_minhash_pairs_are_true_near_dups(spark, sf_dir):
-    t = load_tables(spark, sf_dir)
-    pairs = dedup.minhash_lsh_pairs(t["documents"], jaccard_threshold=0.5).collect()
-
-    def shingle_set(text):
-        toks = text.lower().split()
-        return {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
-
-    docs = {
-        r["doc_id"]: shingle_set(r["text"])
-        for r in t["documents"].select("doc_id", "text").collect()
-    }
-    for row in pairs:
-        a, b = docs[row["id_a"]], docs[row["id_b"]]
-        true_j = len(a & b) / len(a | b)
-        # LSH distance is computed on hashed shingle sets; allow
-        # hash-collision slack around the 0.5 similarity threshold.
-        assert true_j >= 0.4, (row, true_j)
-        assert row["id_a"] < row["id_b"]
-    # And the pair set must be a near-dup TAIL, not a vocabulary clique:
-    # the pre-shingling featurization returned 68% of all doc pairs here.
-    n_docs = t["documents"].count()
-    assert len(pairs) < 0.02 * n_docs * (n_docs - 1) / 2
-
-
 def test_simhash_deterministic_and_metric(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     s1 = dedup.simhash_signatures(t["documents"]).collect()
@@ -1497,21 +1472,6 @@ def test_semantic_dedup_stats_split_identical_vectors_across_clusters(spark):
         assert got[c]["n_to_drop"] == 1, got
 
 
-def test_ivf_degenerate_path_excludes_null_vectors(spark):
-    """Round-4 review find: the sub-2-row IVF fallback brute-forced the
-    UNFILTERED frame, leaking NULL-vector rows (outside the operator's
-    domain) into the top-k with NULL cos."""
-    emb = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, None), (3, None)],
-        "vec_id bigint, embedding array<float>",
-    )
-    q = spark.createDataFrame(
-        [(7, [1.0, 0.0])], "query_id bigint, query_vec array<float>"
-    )
-    out = similarity.ivf_topk(emb, q, k=3).collect()
-    assert [(r["query_id"], r["vec_id"]) for r in out] == [(7, 1)]
-
-
 def test_unshingleable_count_matches_minhash_exclusions(spark):
     """Round-4 review find: the diagnostic used run-splitting while the
     minhash featurizer's plain Tokenizer split on single whitespace and
@@ -1530,7 +1490,7 @@ def test_unshingleable_count_matches_minhash_exclusions(spark):
     dup = spark.createDataFrame(
         [(1, "alpha  beta"), (2, "alpha  beta")], "doc_id bigint, text string"
     )
-    assert dedup.minhash_lsh_pairs(dup, jaccard_threshold=0.5).collect() == []
+    assert dedup.minhash_portable_pairs(dup, jaccard_threshold=0.5).collect() == []
 
 
 def test_png_decode_normalizes_corruption_to_valueerror():
@@ -1605,7 +1565,6 @@ def test_text_dedup_collapse_equals_naive_on_duplicate_heavy_corpus(spark):
         return sorted(tuple(r) for r in df.select(*cols).collect())
 
     for fn, cols, kw in [
-        (dedup.minhash_lsh_pairs, ["id_a", "id_b", "jaccard_dist"], {}),
         (dedup.minhash_portable_pairs, ["id_a", "id_b", "jaccard_dist"], {}),
         (dedup.simhash_pairs, ["id_a", "id_b", "hamming"], {}),
         (dedup.simhash_portable_pairs, ["id_a", "id_b", "hamming"], {}),
@@ -1629,10 +1588,11 @@ def test_text_dedup_collapse_equals_naive_on_duplicate_heavy_corpus(spark):
 @pytest.mark.slow  # ~18 s boundary battery; opt-in (r11, see pytest.ini)
 def test_text_dedup_collapse_equals_naive_at_threshold_boundary(spark):
     """Collapse≡naive must hold AT the self-distance boundary, where the
-    families' naive filters differ in strictness: approxSimilarityJoin
-    keeps candidates with dist STRICTLY below 1-threshold (verified
-    against spark-mllib 4.1.2 bytecode), so at jaccard_threshold=1.0 the
-    naive minhash form emits NO pairs even for byte-identical docs — the
+    families' naive filters differ in strictness: the MinHash filter
+    keeps candidates with dist STRICTLY below 1-threshold (the semantics of
+    MLlib's approxSimilarityJoin, which it mirrors), so at
+    jaccard_threshold=1.0 the naive minhash form emits NO pairs even for
+    byte-identical docs — the
     review of the hand-expanded collapse branches found minhash emitting
     its within-group pairs unconditionally there (the other three copies
     had the guard; now all four share _collapsed_pairs and pin the
@@ -1655,7 +1615,7 @@ def test_text_dedup_collapse_equals_naive_at_threshold_boundary(spark):
         return sorted(tuple(r) for r in df.select(*cols).collect())
 
     cases = [
-        (dedup.minhash_lsh_pairs, ["id_a", "id_b", "jaccard_dist"],
+        (dedup.minhash_portable_pairs, ["id_a", "id_b", "jaccard_dist"],
          dict(jaccard_threshold=1.0)),
         (dedup.simhash_pairs, ["id_a", "id_b", "hamming"],
          dict(max_hamming=-1)),
@@ -1683,7 +1643,7 @@ def test_text_dedup_collapse_equals_naive_at_threshold_boundary(spark):
             docs, threshold=1.0), ["doc_a", "doc_b"])) > 0
     )
     # ... while the strict minhash boundary emits nothing there.
-    assert canon(dedup.minhash_lsh_pairs(
+    assert canon(dedup.minhash_portable_pairs(
         docs, jaccard_threshold=1.0), ["id_a", "id_b"]) == []
 
 

@@ -76,3 +76,29 @@ def test_variant_extract_equals_schema_declared_path(spark, sf_dir):
     j = df.join(ev, "event_id")
     assert j.filter("k_int IS DISTINCT FROM k_classic").count() == 0
     assert df.filter("inferred_schema != 'OBJECT<k: BIGINT>'").count() == 0
+
+
+def test_ema_kernel_carries_null_user_across_batches():
+    """A NULL-user group that straddles an Arrow batch boundary must carry
+    its recurrence like any other user: the kernel fed two batches equals
+    the kernel fed the same rows as one batch. Spark hands a nullable
+    BIGINT key to pandas as float64 with NaN for NULL, and NaN == NaN is
+    False, so a plain equality test would restart the NULL group's EMA."""
+    import numpy as np
+    import pandas as pd
+
+    from etl_asana_spark.queries_udx import _ema_batches
+
+    rows = pd.DataFrame(
+        {
+            "user_id": [np.nan, np.nan, np.nan, np.nan, 7.0, 7.0],
+            "event_id": [1, 2, 3, 4, 5, 6],
+            "value": [10.0, 2.0, 30.0, 4.0, 50.0, 6.0],
+        }
+    )
+    ref = pd.concat(list(_ema_batches([rows.copy()])), ignore_index=True)
+    got = pd.concat(
+        list(_ema_batches([rows.iloc[:2].copy(), rows.iloc[2:].copy()])),
+        ignore_index=True,
+    )
+    pd.testing.assert_frame_equal(got, ref, check_exact=True)
